@@ -1246,7 +1246,10 @@ def oracle_sql() -> dict[str, str]:
     valid_re = VALID_ANCHORED.replace("'", "''")
 
     # enrichment oracles: interval tables dumped to parquet, range-joined
-    gd = _dump_geoip_intervals()
+    try:
+        gd, mmdb_error = _dump_geoip_intervals(), None
+    except OSError as exc:
+        gd, mmdb_error = None, exc
     key_hex = _KEY_HEX_SQL.format(v4re=_V4_RE_SQL, num=_NUM_SQL)
     keyed = f"""{ips},
 k AS (SELECT rid, ip, {key_hex} AS key FROM ips)"""
@@ -1274,7 +1277,7 @@ k AS (SELECT rid, ip, {key_hex} AS key FROM ips)"""
         f"'{_V4_FIND_SQL}', 0)"
     )
 
-    return {
+    oracles = {
         "is_valid": f"""{ips}
 SELECT rid, ip,
        CASE WHEN ip IS NULL THEN NULL
@@ -1780,6 +1783,13 @@ SELECT CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS ws,
 FROM events
 GROUP BY 1, 2, 3""",
     }
+    if mmdb_error is not None:
+        # only the oracles that read the dumped intervals depend on the
+        # reference MMDBs; they fail loudly, every other query is checked
+        msg = f"GeoIP test MMDBs unavailable: {mmdb_error}".replace("'", "''")
+        for name in ("geoip_asn", "geoip_full"):
+            oracles[name] = f"SELECT error('{msg}')"
+    return oracles
 
 
 def _jaccard_pairs_sql(guard_freq: int | None = None, threshold: float = 0.5) -> str:

@@ -283,17 +283,22 @@ def packed16_to_str(b: bytes) -> str | None:
     return str(ipaddress.IPv6Address(b))
 
 
+def merge_intervals(intervals: list[tuple[int, int]]) -> list[tuple[int, int]]:
+    """Sort [lo,hi] int intervals and merge overlapping or adjacent ones."""
+    merged: list[tuple[int, int]] = []
+    for lo, hi in sorted(intervals):
+        if merged and lo <= merged[-1][1] + 1:
+            merged[-1] = (merged[-1][0], max(merged[-1][1], hi))
+        else:
+            merged.append((lo, hi))
+    return merged
+
+
 def sort_intervals(
     intervals: list[tuple[int, int]],
 ) -> tuple[np.ndarray, np.ndarray]:
     """Merge + sort [lo,hi] 128-bit int intervals into |S16 key arrays."""
-    merged: list[tuple[int, int]] = []
-    for lo, hi in sorted(intervals):
-        if merged and lo <= merged[-1][1] + 1:
-            prev_lo, prev_hi = merged[-1]
-            merged[-1] = (prev_lo, max(prev_hi, hi))
-        else:
-            merged.append((lo, hi))
+    merged = merge_intervals(intervals)
     lo_arr = np.array([int128_to_bytes(lo) for lo, _ in merged], dtype="|S16")
     hi_arr = np.array([int128_to_bytes(hi) for _, hi in merged], dtype="|S16")
     return lo_arr, hi_arr

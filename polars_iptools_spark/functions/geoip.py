@@ -25,11 +25,12 @@ __all__ = ["asn", "full"]
 _DB = _enrich.BroadcastedDB(_enrich.build_geoip_tables)
 
 
-def _get_tables(reload_mmdb: bool, db_dir: str | None):
+def _tables_getter(reload_mmdb: bool, db_dir: str | None):
+    """Getter of the decoded tables, closing over the broadcast alone
+    when there is one."""
     resolved = _enrich.resolve_mmdb_dir("MAXMIND_MMDB_DIR", db_dir)
     spark = SparkSession.getActiveSession()
-    bc, tables = _DB.broadcast(spark, resolved, reload=reload_mmdb)
-    return bc, tables
+    return _enrich.shipped(*_DB.broadcast(spark, resolved, reload=reload_mmdb))
 
 
 def _col(expr):
@@ -39,11 +40,11 @@ def _col(expr):
 def asn_udf(reload_mmdb: bool = False, db_dir: str | None = None):
     """The ASN-lookup pandas UDF itself (for ``spark.udf.register`` /
     SQL-text use); :func:`asn` is the Column-level sugar over it."""
-    bc, tables = _get_tables(reload_mmdb, db_dir)
+    load = _tables_getter(reload_mmdb, db_dir)
 
     @F.pandas_udf(StringType())
     def _asn_udf(s: pd.Series) -> pd.Series:
-        t = (bc.value if bc is not None else tables)["asn"]
+        t = load()["asn"]
         fast = _enrich.series_to_keys_s16(s)
         if fast is not None:  # string batches: zero per-row Python
             kb, mask = fast
@@ -75,11 +76,11 @@ def full_udf(reload_mmdb: bool = False, db_dir: str | None = None):
     """The 12-field geolocation pandas UDF itself (for
     ``spark.udf.register`` / SQL-text use); :func:`full` is the
     Column-level sugar over it."""
-    bc, tables = _get_tables(reload_mmdb, db_dir)
+    load = _tables_getter(reload_mmdb, db_dir)
 
     @F.pandas_udf(GEOIP_SCHEMA)
     def _full_udf(s: pd.Series) -> pd.DataFrame:
-        tabs = bc.value if bc is not None else tables
+        tabs = load()
         ta, tc = tabs["asn"], tabs["city"]
         fast = _enrich.series_to_keys_s16(s)
         if fast is not None:  # string batches: zero per-row Python

@@ -1,12 +1,19 @@
 """IP scalar functions — Spark-native re-expression of the reference API.
 
-Design rule: every function that *can* be pure Catalyst expressions is
-(``is_valid``, ``is_private``, ``ipv4_to_numeric``, ``numeric_to_ipv4``,
-``to_ipv4``, IPv4-only ``extract_ips`` and small-set IPv4 ``is_in`` run
-entirely inside whole-stage codegen — zero Python workers).  Only the
-operations that genuinely need real IP parsing (IPv6 canonicalization,
-16-byte addresses, mixed-family CIDR sets) drop to vectorized
-Arrow/pandas UDFs.
+Design rule: every function is pure Catalyst expressions unless it
+needs a lookup table.  ``is_valid``, ``is_private``, the numeric
+conversions, ``to_address``/``to_string``, both ``extract_ips`` paths
+and ``is_in`` over at most 64 intervals run inside the JVM — zero
+Python workers.  IPv6 goes through one native codec: strict text -> 32
+lowercase hex digits (:func:`_v6_hex`) and back to RFC 5952 text
+(:func:`_hex_to_v6_text`).  Only ``is_in`` over a larger CIDR set
+crosses into a vectorized Arrow/pandas UDF (sorted-interval
+searchsorted).
+
+The pandas kernels kept here (``_to_address_udf``, ``_to_string_udf``,
+``_extract_udf_v6``) back the ``pis_*`` SQL-text functions and are the
+reference implementations the property suite pins the native
+expressions against.
 
 Semantics contracts are pinned to the reference kernels, cited per
 function (file:line into /root/reference/).
@@ -27,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType, BooleanType, LongType, StringType
 
 from . import _ipparse
+from ._enrich import shipped
 
 __all__ = [
     "is_valid",
@@ -94,6 +102,18 @@ def _col(expr: Column | str) -> Column:
     return F.col(expr) if isinstance(expr, str) else expr
 
 
+def _let(value: Column, body) -> Column:
+    """``body(v)`` with ``v`` bound to ``value`` once.  Catalyst trees do
+    not share subtrees, so a body that reads a large input several times
+    would copy it into the plan, and evaluate each copy; on
+    ``to_string(to_address(ip))`` over 100k rows at ``local[4]`` the
+    copies took planning from 0.2 s to 1.8 s and the first
+    (code-generating) run from 1.5 s to 6.2 s.  The body evaluates
+    interpreted and shares no subexpressions, so it binds what it reads
+    more than once."""
+    return F.transform(F.array(value), body)[0]
+
+
 # ---------------------------------------------------------------------------
 # native (pure-Catalyst) scalar functions
 # ---------------------------------------------------------------------------
@@ -117,12 +137,18 @@ def ipv4_to_numeric(expr: Column | str) -> Column:
     /root/reference/src/iptools.rs:82-103, tests/test_iptools.py:72-92.
     """
     c = _col(expr)
-    num = F.aggregate(
-        F.transform(F.split(c, r"\."), lambda x: x.try_cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc * 256 + x,
+    return F.when(c.rlike(V4_ANCHORED), _quad_num(c)).otherwise(
+        F.lit(None).cast("long")
     )
-    return F.when(c.rlike(V4_ANCHORED), num).otherwise(F.lit(None).cast("long"))
+
+
+def _quad_num(x: Column) -> Column:
+    """u32 value of a dotted quad already known to be strict."""
+    return F.aggregate(
+        F.transform(F.split(x, r"\."), lambda t: t.try_cast("long")),
+        F.lit(0).cast("long"),
+        lambda acc, t: acc * 256 + t,
+    )
 
 
 def numeric_to_ipv4(expr: Column | str) -> Column:
@@ -174,7 +200,161 @@ def to_ipv4(expr: Column | str) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Arrow-UDF scalar functions (16-byte addresses)
+# native IPv6 codec: text <-> 32 lowercase hex digits
+# ---------------------------------------------------------------------------
+
+# the 12-byte prefix of a v4-mapped address (::ffff:0:0/96), as hex
+_V4_MAPPED_HEX = "0" * 20 + "ffff"
+
+
+def _v6_hex_unchecked(s: Column) -> Column:
+    """IPv6 text already known to match ``V6_ANCHORED`` -> its 128 bits
+    as 32 lowercase hex digits.
+
+    A dotted-quad tail becomes two hex groups, every group is left-padded
+    to four digits, and ``::`` expands to the missing zero digits — with
+    literal splits and replaces only, no regex."""
+    tail = F.substring_index(s, ":", -1)
+    quad = F.format_string(
+        "%02x%02x:%02x%02x",
+        *[F.split_part(tail, F.lit("."), F.lit(i)).try_cast("int") for i in range(1, 5)],
+    )
+    groups = F.when(
+        s.contains("."), F.concat(F.left(s, F.length(s) - F.length(tail)), quad)
+    ).otherwise(s)
+    padded = F.array_join(
+        F.transform(
+            F.split(groups, ":"),
+            lambda g: F.when(g == "", g).otherwise(F.lpad(g, 4, "0")),
+        ),
+        ":",
+    )
+
+    def expand(p: Column) -> Column:
+        missing = 32 - F.length(F.replace(p, F.lit(":"), F.lit("")))
+        full = F.replace(p, F.lit("::"), F.repeat(F.lit("0"), missing))
+        return F.lower(F.replace(full, F.lit(":"), F.lit("")))
+
+    return _let(padded, expand)
+
+
+def _v6_hex(s: Column) -> Column:
+    """Strict IPv6 text -> 32 lowercase hex digits; null unless ``s``
+    matches ``V6_ANCHORED`` (so dotted quads and invalid text -> null).
+    Fixed-width lowercase hex orders like the unsigned 128-bit value."""
+    return F.when(s.rlike(V6_ANCHORED), _v6_hex_unchecked(s))
+
+
+def _strip_group_zeros(groups: Column) -> Column:
+    """Drop the leading zeros of every ``:``-separated hex group."""
+    return F.regexp_replace(groups, r"\b0+(?=[0-9a-f])", "")
+
+
+def _hex_to_v6_text(h: Column) -> Column:
+    """32 lowercase hex digits -> RFC 5952 text, as Python's
+    ``str(IPv6Address)``: zeros stripped per group, and the first
+    longest run of two or more zero groups compressed to ``::``.
+
+    ``p`` is ``:g0:g1:...:g7:`` (41 chars, every group four digits), so
+    a run of k zero groups is the substring ``:0000:...0000:`` and
+    ``instr`` finds its first occurrence; probing k = 8..2 in order
+    makes the first hit the first longest run."""
+    framed = F.concat(
+        *[F.concat(F.lit(":"), F.substring(h, 4 * i + 1, 4)) for i in range(8)],
+        F.lit(":"),
+    )
+
+    def compress(p: Column) -> Column:
+        # first hit as pos * 16 + k, so the probes run once
+        probes = [(k, F.instr(p, F.lit(":" + "0000:" * k))) for k in range(8, 1, -1)]
+        code = F.coalesce(*[F.when(i > 0, i * 16 + k) for k, i in probes])
+
+        def splice(c: Column) -> Column:
+            pos, k = F.shiftright(c, 4), c.bitwiseAND(15)
+            left = F.substring(p, F.lit(2), pos - 2)
+            right = F.substring(p, pos + 5 * k + 1, 40 - pos - 5 * k)
+            return F.when(c.isNotNull(), F.concat(left, F.lit("::"), right)).otherwise(
+                F.substring(p, 2, 39)
+            )
+
+        return _strip_group_zeros(_let(code, splice))
+
+    return _let(framed, compress)
+
+
+def _hex_to_quad(h8: Column) -> Column:
+    """8 hex digits -> dotted quad (one ``conv``, then bit arithmetic)."""
+    return _let(F.conv(h8, 16, 10), numeric_to_ipv4)
+
+
+def _by_input_type(x: Column, text: Column, binary: Column, integer: Column) -> Column:
+    """Pick the branch for ``x``'s SQL type.  ``typeof`` folds at plan
+    time, so the CASE collapses to one branch; every branch must still
+    analyze for string, bigint and binary input, which is why branches
+    read ``x`` only through ``x.cast("string")`` and ``hex(x)``."""
+    t = F.typeof(x)
+    return F.when(t == "string", text).when(t == "binary", binary).otherwise(integer)
+
+
+def _to_address_expr(x: Column) -> Column:
+    s = x.cast("string")
+    h = F.hex(x)
+    n = s.try_cast("long")
+    v4 = F.concat(F.lit(_V4_MAPPED_HEX), F.lpad(F.hex(ipv4_to_numeric(s)), 8, "0"))
+    text = F.unhex(F.coalesce(v4, _v6_hex(s)))
+    binary = F.when(F.length(h) == 32, F.unhex(h)).when(
+        F.length(h) == 8, F.unhex(F.concat(F.lit(_V4_MAPPED_HEX), h))
+    )
+    integer = F.when(
+        (n >= 0) & (n <= _MAX_U32),
+        F.unhex(F.concat(F.lit(_V4_MAPPED_HEX), F.lpad(F.hex(n), 8, "0"))),
+    )
+    return _by_input_type(x, text, binary, integer)
+
+
+def to_address(expr: Column | str) -> Column:
+    """Promote string / u32 / binary column -> 16-byte IPAddress binary.
+
+    IPv4 stored v4-mapped ``::ffff:a.b.c.d``
+    (reference ``src/iptools.rs:328-385``).  null/unparseable -> null;
+    4-byte binary is promoted to v4-mapped, 16-byte binary passes
+    through, other lengths -> null; integers outside u32 -> null.
+    Pure Catalyst: the input type is dispatched at plan time.
+    """
+    return _let(_col(expr), _to_address_expr)
+
+
+def _hex_text(h: Column) -> Column:
+    """Lowercase hex of a 16- or 4-byte address -> canonical text."""
+    return F.when(
+        F.length(h) == 32,
+        F.when(
+            h.startswith(_V4_MAPPED_HEX), _hex_to_quad(F.substring(h, 25, 8))
+        ).otherwise(_hex_to_v6_text(h)),
+    ).when(F.length(h) == 8, _hex_to_quad(h))
+
+
+def _to_string_expr(x: Column) -> Column:
+    number = numeric_to_ipv4(x.cast("string"))
+    return _by_input_type(x, number, _let(F.lower(F.hex(x)), _hex_text), number)
+
+
+def to_string(expr: Column | str) -> Column:
+    """Typed IP (u32 LongType or 16/4-byte binary) -> canonical string.
+
+    v4-mapped 16-byte values render as plain dotted quad
+    (reference ``src/iptools.rs:262-325``); IPv6 in RFC-5952 canonical
+    compression. null / wrong-length binary / out-of-range u32 -> null.
+    Pure Catalyst: the input type is dispatched at plan time.
+    """
+    return _let(_col(expr), _to_string_expr)
+
+
+# ---------------------------------------------------------------------------
+# pandas reference kernels of the typed round-trip.  They back the
+# ``pis_to_address``/``pis_to_string`` SQL-text functions (a SQL-bodied
+# function needs a typed parameter, so the polymorphic op cannot become
+# one) and are what the property suite pins the native expressions to.
 # ---------------------------------------------------------------------------
 
 
@@ -212,16 +392,6 @@ def _to_address_udf(s: pd.Series) -> pd.Series:
             out[idx] = [p.tobytes() for p in packed]
         return pd.Series(out)
     return pd.Series(_ipparse.pack_ip_series(s))
-
-
-def to_address(expr: Column | str) -> Column:
-    """Promote string / u32 / binary column -> 16-byte IPAddress binary.
-
-    IPv4 stored v4-mapped ``::ffff:a.b.c.d``
-    (/root/reference/src/iptools.rs:328-385).  null/unparseable -> null.
-    Runtime dtype dispatch happens per Arrow batch inside the UDF.
-    """
-    return _to_address_udf(_col(expr))
 
 
 @F.pandas_udf(StringType())
@@ -272,16 +442,6 @@ def _to_string_udf(s: pd.Series) -> pd.Series:
         )
         out[np.flatnonzero(ok.to_numpy())] = _ipparse.quad_strings(octs)
     return pd.Series(out)
-
-
-def to_string(expr: Column | str) -> Column:
-    """Typed IP (u32 LongType or 16/4-byte binary) -> canonical string.
-
-    v4-mapped 16-byte values render as plain dotted quad
-    (/root/reference/src/iptools.rs:262-325); IPv6 in RFC-5952 canonical
-    compression. null / wrong-length binary -> null.
-    """
-    return _to_string_udf(_col(expr))
 
 
 # ---------------------------------------------------------------------------
@@ -378,6 +538,26 @@ def _is_in_kernel(
     return pd.Series(out)
 
 
+# sets of at most this many merged intervals run natively; larger ones
+# take the sorted-interval searchsorted UDF
+_NATIVE_IS_IN_MAX = 64
+
+
+def _in_sorted(v: Column, bounds: list[tuple]) -> Column:
+    """``v`` inside one of the sorted, disjoint [lo, hi] ``bounds``: a
+    balanced CASE tree, so a row makes ~log2(len) comparisons instead of
+    testing every interval."""
+    if not bounds:
+        return F.lit(False)
+    if len(bounds) == 1:
+        lo, hi = bounds[0]
+        return (v >= lo) & (v <= hi)
+    mid = len(bounds) // 2
+    return F.when(v < bounds[mid][0], _in_sorted(v, bounds[:mid])).otherwise(
+        _in_sorted(v, bounds[mid:])
+    )
+
+
 def is_in(
     expr: Column | str, networks: Iterable[str], _force_udf: bool = False
 ) -> Column:
@@ -389,42 +569,55 @@ def is_in(
     reference's two-trie split (src/iptools.rs:160-166): a dotted-quad
     string checks only v4 CIDRs; anything parsed as IPv6 — including
     v4-mapped text like ``::ffff:1.2.3.4`` — checks only v6 CIDRs.
-    The network set is compiled once on the driver into sorted interval
-    arrays and shipped to executors — as a closure for small sets, as a
-    cached Spark broadcast above 1 MiB.
+    The network set is compiled once, when the Column is built, into merged
+    intervals.  Up to 64 intervals become pure-Catalyst range tests (v6
+    bounds compare as fixed-width hex strings); larger sets run a
+    searchsorted pandas UDF over sorted interval arrays, shipped as a
+    closure for small sets and as a cached Spark broadcast above 1 MiB.
     """
     v4_iv, v6_iv = _compile_networks(list(networks))
+    v4_iv = _ipparse.merge_intervals(v4_iv)
+    v6_iv = _ipparse.merge_intervals(v6_iv)
 
-    # fast path: a small all-IPv4 set compiles to a pure-Catalyst range
-    # disjunction over the numeric form — no Python worker at all
-    # (_force_udf is a test seam: the property suite asserts both
-    # branches agree on every input)
-    if not _force_udf and not v6_iv and len(v4_iv) <= 64:
-        c = _col(expr)
-        n = ipv4_to_numeric(c)
-        member = F.lit(False)
-        for lo, hi in v4_iv:
-            lo32, hi32 = lo & 0xFFFFFFFF, hi & 0xFFFFFFFF
-            member = member | ((n >= lo32) & (n <= hi32))
-        return (
-            F.when(c.isNull(), F.lit(None).cast("boolean"))
-            .when(n.isNotNull(), member)
-            # valid IPv6 string but v4-only set -> false; invalid -> null
-            .when(c.rlike(V6_ANCHORED), F.lit(False))
-            .otherwise(F.lit(None).cast("boolean"))
-        )
+    # up to _NATIVE_IS_IN_MAX intervals compile to a pure-Catalyst range
+    # disjunction: v4 over the numeric form, v6 over the fixed-width hex
+    # form (_force_udf is a test seam: the property suite asserts both
+    # paths agree on every input)
+    if not _force_udf and len(v4_iv) + len(v6_iv) <= _NATIVE_IS_IN_MAX:
+        b4 = [(lo & 0xFFFFFFFF, hi & 0xFFFFFFFF) for lo, hi in v4_iv]
+        b6 = [(format(lo, "032x"), format(hi, "032x")) for lo, hi in v6_iv]
 
+        def member(c: Column) -> Column:
+            in4 = _let(
+                ipv4_to_numeric(c), lambda n: F.when(n.isNotNull(), _in_sorted(n, b4))
+            )
+            if b6:
+                in6 = _let(
+                    _v6_hex(c), lambda h: F.when(h.isNotNull(), _in_sorted(h, b6))
+                )
+            else:
+                # valid IPv6 string but v4-only set -> false; invalid -> null
+                in6 = F.when(c.rlike(V6_ANCHORED), F.lit(False))
+            return F.coalesce(in4, in6)
+
+        return _let(_col(expr), member)
+
+    return _is_in_udf(v4_iv, v6_iv)(_col(expr))
+
+
+def _is_in_udf(v4_iv: list[tuple[int, int]], v6_iv: list[tuple[int, int]]):
+    """The searchsorted membership UDF over compiled interval lists."""
     lo4, hi4 = _ipparse.sort_intervals(v4_iv)
     lo6, hi6 = _ipparse.sort_intervals(v6_iv)
     tables = (lo4, hi4, lo6, hi6)
-    bc = _broadcast_intervals(tables)
+    load = shipped(_broadcast_intervals(tables), tables)
 
     @F.pandas_udf(BooleanType())
-    def _is_in_udf(s: pd.Series) -> pd.Series:
-        l4, h4, l6, h6 = bc.value if bc is not None else tables
+    def _udf(s: pd.Series) -> pd.Series:
+        l4, h4, l6, h6 = load()
         return _is_in_kernel(s, l4, h4, l6, h6)
 
-    return _is_in_udf(_col(expr))
+    return _udf
 
 
 # ---------------------------------------------------------------------------
@@ -453,24 +646,29 @@ def _refang(c: Column, v6: bool) -> Column:
     return out
 
 
-def _v4_elem_filters(
+# fc00::/7, the reference's v6 "private" (reference src/iptools.rs:245-247)
+def _is_ula(h: Column) -> Column:
+    return h.startswith("fc") | h.startswith("fd")
+
+
+_V6_LOOPBACK_HEX = "0" * 31 + "1"
+
+
+def _keep_flags(
     only_public: bool,
     ignore_private: bool,
     ignore_loopback: bool,
     ignore_broadcast: bool,
 ):
-    """Element predicate over extracted (guaranteed-valid) IPv4 strings."""
+    """Extraction flags -> (predicate over a v4 u32, predicate over a v6
+    hex form) that keep an address."""
+    drop_priv = only_public or ignore_private
+    drop_loop = only_public or ignore_loopback
+    drop_bcast = only_public or ignore_broadcast
 
-    def pred(x: Column) -> Column:
-        n = F.aggregate(
-            F.transform(F.split(x, r"\."), lambda t: t.try_cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, t: acc * 256 + t,
-        )
+    def keep4(n: Column) -> Column:
         keep = F.lit(True)
-        drop_priv = only_public or ignore_private
-        drop_loop = only_public or ignore_loopback
-        drop_bcast = only_public or ignore_broadcast
+        # reference is_private = RFC1918 only (src/iptools.rs:70-79)
         if drop_priv:
             keep = keep & ~_is_private_num(n)
         if drop_loop:
@@ -479,16 +677,28 @@ def _v4_elem_filters(
             keep = keep & (n != _MAX_U32)
         return keep
 
-    return pred
+    def keep6(h: Column) -> Column:
+        keep = F.lit(True)
+        if drop_priv:
+            keep = keep & ~_is_ula(h)
+        if drop_loop:
+            keep = keep & (h != _V6_LOOPBACK_HEX)
+        return keep
+
+    return keep4, keep6
 
 
-# -- IPv6-capable extraction (Arrow UDF path) -------------------------------
+# -- IPv6-capable extraction -------------------------------------------------
 
-_SCAN_RE = re.compile(
-    rf"\[(?P<br>[0-9A-Fa-f:.]+)\]"
-    rf"|(?<![0-9A-Fa-f:.])(?P<v6>(?:{_H}:|::)[0-9A-Fa-f:.]*)"
-    rf"|(?<![0-9.])(?P<v4>{_V4})(?![0-9.])"
+# one candidate scanner that Java and Python regex read alike: a bracketed
+# run, a v6-shaped run, or a strict dotted quad not butted against
+# digits/dots
+_SCAN = (
+    r"\[[0-9A-Fa-f:.]+\]"
+    rf"|(?<![0-9A-Fa-f:.])(?:{_H}:|::)[0-9A-Fa-f:.]*"
+    rf"|(?<![0-9.]){_V4}(?![0-9.])"
 )
+_SCAN_RE = re.compile(_SCAN)
 
 
 def _validate_candidate(cand: str):
@@ -512,7 +722,9 @@ def _extract_row_fn(
 ):
     """Per-flag extraction closure, cached per Python worker — the Spark
     analog of the reference's per-flag-mask extractor cache
-    (/root/reference/src/iptools.rs:12-58)."""
+    (reference ``src/iptools.rs:12-58``).  The reference kernel of
+    the native ``ipv6=True`` path: it backs the ``pis_extract_*_v6``
+    SQL-text functions and the property suite."""
     drop_priv = only_public or ignore_private
     drop_loop = only_public or ignore_loopback
     drop_bcast = only_public or ignore_broadcast
@@ -551,7 +763,9 @@ def _extract_row_fn(
     def run(text: str) -> list[str]:
         found: list[str] = []
         for m in _SCAN_RE.finditer(text):
-            cand = m.group("br") or m.group("v6") or m.group("v4")
+            cand = m.group()
+            if cand.startswith("["):
+                cand = cand[1:-1]
             addr = _validate_candidate(cand)
             if addr is None or not keep(addr):
                 continue
@@ -584,6 +798,39 @@ def _extract_udf_v6(
     return _udf
 
 
+def _v6_canon(h: Column) -> Column:
+    """Hex form -> text as Rust's ``IpAddr`` Display writes it: RFC 5952,
+    except that v4-mapped addresses keep a dotted tail
+    (``::ffff:10.0.0.1``; reference ``src/iptools.rs:62``)."""
+    return F.when(
+        h.startswith(_V4_MAPPED_HEX),
+        F.concat(F.lit("::ffff:"), _hex_to_quad(F.substring(h, 25, 8))),
+    ).otherwise(_hex_to_v6_text(h))
+
+
+def _extract_v6(c: Column, keep4, keep6) -> Column:
+    """Scan the refanged text with ``_SCAN``; per candidate drop the
+    brackets, validate (retrying once with trailing ``.``/``:`` trimmed),
+    filter with ``keep4``/``keep6`` and canonicalize — all JVM-side."""
+    cands = F.regexp_extract_all(_refang(c, v6=True), F.lit(_SCAN), 0)
+
+    def valid(m: Column) -> Column:
+        x = F.when(
+            m.startswith("["), F.substring(m, F.lit(2), F.length(m) - 2)
+        ).otherwise(m)
+        t = F.regexp_replace(x, r"[.:]+\z", "")
+        return F.when(x.rlike(VALID_ANCHORED), x).when(t.rlike(VALID_ANCHORED), t)
+
+    def kept(x: Column) -> Column:
+        return F.when(
+            x.contains(":"),
+            _let(_v6_hex_unchecked(x), lambda h: F.when(keep6(h), _v6_canon(h))),
+        ).otherwise(_let(_quad_num(x), lambda n: F.when(keep4(n), x)))
+
+    ips = F.filter(F.transform(cands, valid), lambda x: x.isNotNull())
+    return F.filter(F.transform(ips, kept), lambda x: x.isNotNull())
+
+
 def extract_ips(
     expr: Column | str,
     ipv6: bool = False,
@@ -599,52 +846,25 @@ def extract_ips(
     null -> null; no matches -> empty list
     (/root/reference/src/iptools.rs:186-220, tests/test_iptools.py:174-367).
 
-    The default IPv4-only path runs entirely JVM-side
-    (regexp_replace + regexp_extract_all + higher-order filter);
-    ``ipv6=True`` switches to a vectorized Arrow UDF because RFC-5952
-    canonical compression needs real parsing.
+    Both paths run JVM-side.  The default IPv4-only path is
+    regexp_replace + regexp_extract_all + higher-order filter;
+    ``ipv6=True`` scans with ``_SCAN`` and canonicalizes IPv6 through
+    the native hex codec.
     """
     c = _col(expr)
+    keep4, keep6 = _keep_flags(
+        only_public, ignore_private, ignore_loopback, ignore_broadcast
+    )
     if ipv6:
-        udf = _extract_udf_v6(
-            only_public, ignore_private, ignore_loopback, ignore_broadcast
-        )
-        # Native prefilter: a row whose refanged text contains neither
-        # ':' nor '[' cannot produce a v6 match NOR a bracketed-scan
-        # match (the scanner's v6 alternative needs a colon; its
-        # bracket alternative needs '['; with both absent the full
-        # scan reduces exactly to the strict-quad v4 alternative,
-        # which is what the JVM-native ipv6=False path computes).
-        # Those rows take the native path, and the UDF receives NULL
-        # instead of the text — Spark still runs the ArrowEvalPython
-        # node over every row, but masked rows cross as nulls, so
-        # v6-free batches pay neither serialization nor Python regex.
-        # The gate probes the v6-refanged text so defanged '[:]'/'(:)'
-        # markers correctly route to the scanner.
-        rt = _refang(c, v6=True)
-        needs_py = rt.contains(":") | rt.contains("[")
-        native = extract_ips(
-            c,
-            ipv6=False,
-            only_public=only_public,
-            ignore_private=ignore_private,
-            ignore_loopback=ignore_loopback,
-            ignore_broadcast=ignore_broadcast,
-        )
-        return F.when(needs_py, udf(F.when(needs_py, c))).otherwise(native)
+        return _extract_v6(c, keep4, keep6)
     refanged = _refang(c, v6=False)
     arr = F.regexp_extract_all(refanged, F.lit(_V4_CAND), 1)
     if only_public or ignore_private or ignore_loopback or ignore_broadcast:
-        arr = F.filter(
-            arr,
-            _v4_elem_filters(
-                only_public, ignore_private, ignore_loopback, ignore_broadcast
-            ),
-        )
-    # Native no-candidate prefilter (the v4 twin of the v6 gate above):
-    # any extractable IPv4 needs a digit.digit bigram in the REFANGED
-    # text, which can only come from "d.d", "d[.]d" or "d(.)d" in the
-    # original — one cheap early-exit rlike over the original column
+        arr = F.filter(arr, lambda x: keep4(_quad_num(x)))
+    # Native no-candidate prefilter: any extractable IPv4 needs a
+    # digit.digit bigram in the REFANGED text, which can only come from
+    # "d.d", "d[.]d" or "d(.)d" in the original — one cheap early-exit
+    # rlike over the original column
     # (probing the original, not `refanged`, keeps the refang
     # subexpression out of the probe branch so it is never computed
     # twice).  CASE WHEN branches evaluate lazily in codegen, so rows
@@ -672,42 +892,9 @@ def extract_private_ips(expr: Column | str, ipv6: bool = False) -> Column:
     """
     c = _col(expr)
     if ipv6:
-        base = extract_ips(c, ipv6=True, ignore_loopback=True, ignore_broadcast=True)
-
-        @F.pandas_udf(ArrayType(StringType()))
-        def _keep_private(s: pd.Series) -> pd.Series:
-            def one(lst):
-                if lst is None:
-                    return None
-                out = []
-                for ip in lst:
-                    addr = ipaddress.ip_address(ip)
-                    if addr.version == 4:
-                        n = int(addr)
-                        if (
-                            (n >> 24) == 10
-                            or (n >> 20) == 0xAC1
-                            or (n >> 16) == 0xC0A8
-                        ):
-                            out.append(ip)
-                    elif (int(addr) >> 121) == (0xFC00 >> 9):
-                        out.append(ip)
-                return out
-
-            return s.map(one)
-
-        return _keep_private(base)
+        return _extract_v6(c, _is_private_num, _is_ula)
     base = extract_ips(c, ignore_loopback=True, ignore_broadcast=True)
-    kept = F.filter(
-        base,
-        lambda x: _is_private_num(
-            F.aggregate(
-                F.transform(F.split(x, r"\."), lambda t: t.try_cast("long")),
-                F.lit(0).cast("long"),
-                lambda acc, t: acc * 256 + t,
-            )
-        ),
-    )
+    kept = F.filter(base, lambda x: _is_private_num(_quad_num(x)))
     return F.when(c.isNull(), F.lit(None).cast(ArrayType(StringType()))).otherwise(
         kept
     )

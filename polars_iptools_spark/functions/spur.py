@@ -25,11 +25,11 @@ def full_udf(reload_mmdb: bool = False, db_dir: str | None = None):
     SQL-text use); :func:`full` is the Column-level sugar over it."""
     resolved = _enrich.resolve_mmdb_dir("SPUR_MMDB_DIR", db_dir)
     spark = SparkSession.getActiveSession()
-    bc, tables = _DB.broadcast(spark, resolved, reload=reload_mmdb)
+    load = _enrich.shipped(*_DB.broadcast(spark, resolved, reload=reload_mmdb))
 
     @F.pandas_udf(SPUR_SCHEMA)
     def _spur_udf(s: pd.Series) -> pd.DataFrame:
-        t = (bc.value if bc is not None else tables)["spur"]
+        t = load()["spur"]
         fast = _enrich.series_to_keys_s16(s)
         if fast is not None:  # string batches: zero per-row Python
             kb, mask = fast

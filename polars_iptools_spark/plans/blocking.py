@@ -134,30 +134,16 @@ def ip_prefix(ip: Column) -> Column:
     octets), /48 for IPv6 (first three hextets of the EXPANDED form).
     Pure Catalyst expression.
 
-    The v6 branch expands ``::`` compression properly — naive
-    token-slicing puts ``2606:4700::1111`` and ``2606:4700:0:1::1``
-    (same /48) in different blocks.  Hextets are lowercased and
-    leading-zero-stripped so non-canonical inputs still group with
-    canonical ones.
+    The v6 branch expands ``::`` compression through the package's one
+    IPv6 codec (``iptools._v6_hex``) — naive token-slicing puts
+    ``2606:4700::1111`` and ``2606:4700:0:1::1`` (same /48) in
+    different blocks.  Hextets are lowercased and leading-zero-stripped
+    so non-canonical inputs still group with canonical ones; invalid
+    IPv6 text has no prefix (null).
     """
-    norm = lambda toks: F.transform(  # noqa: E731
-        toks, lambda x: F.regexp_replace(F.lower(x), "^0+(?=[0-9a-f])", "")
+    first3 = iptools._strip_group_zeros(
+        F.regexp_replace(iptools._v6_hex(ip), "^(.{4})(.{4})(.{4}).*", "$1:$2:$3")
     )
-    head = F.substring_index(ip, "::", 1)
-    tail = F.when(ip.contains("::"), F.substring_index(ip, "::", -1)).otherwise(
-        F.lit("")
-    )
-    htoks = norm(F.filter(F.split(head, ":"), lambda x: x != ""))
-    ttoks = norm(F.filter(F.split(tail, ":"), lambda x: x != ""))
-    # a trailing dotted-quad token spans two 16-bit groups
-    tgroups = F.aggregate(
-        ttoks, F.lit(0), lambda a, x: a + F.when(x.contains("."), 2).otherwise(1)
-    )
-    gap = F.when(ip.contains("::"), 8 - F.size(htoks) - tgroups).otherwise(F.lit(0))
-    zeros = F.when(gap > 0, F.array_repeat(F.lit("0"), gap)).otherwise(
-        F.array().cast("array<string>")
-    )
-    first3 = F.concat_ws(":", F.slice(F.concat(htoks, zeros, ttoks), 1, 3))
     return F.when(ip.contains(":"), F.concat(first3, F.lit("::/48"))).otherwise(
         F.substring_index(ip, ".", 3)
     )

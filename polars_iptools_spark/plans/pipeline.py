@@ -29,7 +29,8 @@ commit+read cycle is a serial pass whose fixed cost is what caps
 N-vs-4N scaling efficiency once the compute stages parallelize well —
 round-2 measured the six-cycle layout at 0.77 with the two compute
 stages at 0.89+.  Invoked either via the API or ``spark-submit
---py-files pipeline_job.zip`` (see BENCH/run_bench.py).
+--py-files pipeline_job.zip``; ``perfbench/run.py --workload linkage``
+drives it end to end through the API.
 """
 
 from __future__ import annotations

@@ -285,8 +285,10 @@ def hot_candidates(
     # Levenshtein entirely over the full candidate stream, and every
     # survivor's ip_sim is the constant 1.0 the generic expression
     # would have produced.  Null IPs drop in both forms (null
-    # comparison -> null -> filtered).
-    if w_ip * 0.5 + w_path + w_repo <= threshold:
+    # comparison -> null -> filtered).  It needs w_ip > 0: with w_ip == 0
+    # an unequal pair's bound EQUALS the cap, so at cap == threshold the
+    # generic >= filter keeps the pairs that equality would drop.
+    if w_ip > 0 and w_ip * 0.5 + w_path + w_repo <= threshold:
         base = pairs.where(F.col(ip_cols[0]) == F.col(ip_cols[1])).withColumn(
             "ip_sim", F.lit(1.0)
         )

@@ -8,15 +8,18 @@ logical plan built through the Column DSL and through the SQL parser
 must agree.  Two mechanisms cover the whole surface:
 
 - :func:`column_sql` — pure-Catalyst ops (is_valid, is_private,
-  ipv4_to_numeric, numeric_to_ipv4, is_in fast path, extract_ips v4
-  path) render their expression tree to SQL text via the JVM
-  ``Expression.sql()``; embedding that text in a ``SELECT`` parses
-  back to an equivalent plan.  No UDF, no re-implementation — the
-  rendered text IS the DSL-built expression.
+  ipv4_to_numeric, numeric_to_ipv4, is_in, extract_ips) render their
+  expression tree to SQL text via the JVM ``Expression.sql()``;
+  embedding that text in a ``SELECT`` parses back to an equivalent
+  plan.  No UDF, no re-implementation — the rendered text IS the
+  DSL-built expression.
 
-- :func:`register_sql_functions` — Arrow-UDF-backed ops (typed
-  address round-trip, IPv6-capable extraction) register under
-  ``pis_*`` names so SQL text can call them directly.
+- :func:`register_sql_functions` — the typed address round-trip and
+  IPv6-capable extraction register under ``pis_*`` names so SQL text
+  can call them by name.  These are the pandas reference kernels, not
+  the native expressions: a SQL function needs a typed parameter, so
+  the polymorphic ``to_address`` cannot be one.  The parity tests
+  therefore also check the native Column API against them.
 
 Parametrized parity tests: tests/test_sql_mode.py.
 """
@@ -99,7 +102,8 @@ def _rewrite_lambdas(text: str) -> str:
 
 
 def register_sql_functions(spark: SparkSession, prefix: str = "pis_") -> list[str]:
-    """Register the Arrow-UDF-backed scalar ops for SQL-text use.
+    """Register the pandas reference kernels of the typed round-trip and
+    of IPv6-capable extraction for SQL-text use.
 
     Returns the registered function names:
       - ``{prefix}to_address(ip)``   — string/u32/binary -> 16-byte address

@@ -18,7 +18,9 @@ def optimized_of(df) -> str:
 
 
 def test_native_ops_have_no_python_workers(spark):
-    df = spark.createDataFrame([("8.8.8.8",)], "ip string")
+    df = spark.createDataFrame(
+        [("8.8.8.8", 134744072, bytes(4))], "ip string, n long, b binary"
+    )
     native = df.select(
         ip.is_valid("ip"),
         ip.is_private("ip"),
@@ -26,6 +28,13 @@ def test_native_ops_have_no_python_workers(spark):
         ip.numeric_to_ipv4(F.lit(1)),
         ip.extract_ips("ip"),
         ip.extract_private_ips("ip"),
+        *[ip.to_address(c) for c in ("ip", "n", "b")],
+        *[ip.to_string(c) for c in ("ip", "n", "b")],
+        ip.to_string(ip.to_address("ip")),
+        ip.is_in("ip", ["8.8.8.0/24", "10.0.0.0/8", "2606:4700::/32", "fc00::/7"]),
+        ip.extract_ips("ip", ipv6=True),
+        ip.extract_public_ips("ip", ipv6=True),
+        ip.extract_private_ips("ip", ipv6=True),
         textstats.token_count(F.col("ip")),
         textstats.quality_score(F.col("ip")),
         textstats.lang_id(F.col("ip")),
@@ -34,6 +43,16 @@ def test_native_ops_have_no_python_workers(spark):
     )
     p = plan_of(native)
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+    native.collect()  # and every native branch executes
+
+
+def test_large_is_in_set_still_plans_the_udf(spark):
+    """Above 64 merged intervals is_in leaves the native range
+    disjunction for the searchsorted UDF."""
+    df = spark.createDataFrame([("8.8.8.8",)], "ip string")
+    nets = [f"{i}.0.0.0/16" for i in range(1, 66)]
+    assert "ArrowEvalPython" in plan_of(df.select(ip.is_in("ip", nets)))
+    assert "ArrowEvalPython" not in plan_of(df.select(ip.is_in("ip", nets[:64])))
 
 
 def test_simhash_and_minhash_have_no_python_workers(spark):

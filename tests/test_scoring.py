@@ -174,3 +174,73 @@ def test_hot_candidates_eq_shortcircuit_matches_generic(spark):
     assert fast_rows == gen_eq_rows
     # and no unequal-IP pair survives the fast path
     assert fast.where(F.col("ip_a") != F.col("ip_b")).count() == 0
+
+
+def _generic_hot_candidates(pairs, weights, threshold):
+    """The score bound of ``hot_candidates`` without the equality
+    short-circuit: the per-pair ip Levenshtein always runs."""
+    from pyspark.sql import functions as F
+
+    from polars_iptools_spark.plans.scoring import levenshtein_sim
+
+    w_ip, w_path, w_repo = weights
+    ip_sim = F.when(F.col("ip_a") == F.col("ip_b"), F.lit(1.0)).otherwise(
+        0.5 * levenshtein_sim(F.col("ip_a"), F.col("ip_b"))
+    )
+    lev_path = F.when(F.col("path_a") == F.col("path_b"), F.lit(1.0)).otherwise(
+        levenshtein_sim(F.col("path_a"), F.col("path_b"))
+    )
+    return (
+        pairs.withColumn("ip_sim", ip_sim)
+        .where(w_ip * F.col("ip_sim") + (w_path + w_repo) >= threshold)
+        .withColumn("lev_path", lev_path)
+        .where(
+            w_ip * F.col("ip_sim")
+            + w_path * (0.5 + 0.5 * F.col("lev_path"))
+            + w_repo
+            >= threshold
+        )
+    )
+
+
+@pytest.mark.parametrize(
+    "weights,threshold",
+    [
+        # w_ip == 0 with w_path + w_repo == threshold: the boundary where
+        # equality alone would drop pairs the generic bound keeps
+        ((0.0, 0.5, 0.25), 0.75),
+        ((0.0, 0.5, 0.25), 0.5),
+        ((0.0, 0.75, 0.25), 1.0),
+        # short-circuit taken: w_ip*0.5 + w_path + w_repo <= threshold
+        ((0.5, 0.25, 0.25), 0.75),
+        ((0.5, 0.25, 0.25), 1.0),
+        ((0.25, 0.5, 0.125), 0.75),
+        # generic path
+        ((0.5, 0.25, 0.25), 0.5),
+        ((0.25, 0.5, 0.25), 0.75),
+    ],
+)
+def test_hot_candidates_weight_sweep_matches_generic(spark, weights, threshold):
+    """Whichever form hot_candidates picks for the ip bound, it returns
+    exactly the rows (and ip_sim / lev_path values) of the generic
+    bound, including at the w_ip == 0 boundary."""
+    from polars_iptools_spark.plans.scoring import hot_candidates
+
+    rows = []
+    for i in range(40):
+        ip_a = f"10.0.0.{i % 7}"
+        ip_b = ip_a if i % 3 else f"10.0.1.{i % 7}"
+        path_b = f"src/m{i % 5}/h{i}.py" if i % 4 == 0 else f"src/m{i % 5}/h{i}_v2.py"
+        rows.append((i, 1000 + i, ip_a, ip_b, f"src/m{i % 5}/h{i}.py", path_b))
+    pairs = spark.createDataFrame(
+        rows, "rid_a long, rid_b long, ip_a string, ip_b string, path_a string, path_b string"
+    )
+
+    def key(df):
+        return sorted(
+            (r.rid_a, r.rid_b, r.ip_sim, round(r.lev_path, 9)) for r in df.collect()
+        )
+
+    got = key(hot_candidates(pairs, weights=weights, threshold=threshold))
+    assert got == key(_generic_hot_candidates(pairs, weights, threshold))
+    assert got, "sweep case selects no rows"

@@ -6,7 +6,9 @@ The reference holds a process-global mmap'd MMDB reader
 walk per row.  Here the driver decodes the file once, flattens every
 record into parallel per-field arrays (so executors never touch dicts
 in the hot loop), and broadcasts the whole thing; each Arrow batch then
-does a single vectorized ``np.searchsorted``.  ``reload`` unpersists and
+becomes keys through :func:`._ipparse.ip_keys` and resolves with one
+vectorized ``np.searchsorted`` (:meth:`FlatTable.lookup_s16`), whatever
+the input column's type.  ``reload`` unpersists and
 re-broadcasts — the Spark analog of ``MaxMindDB::reload``
 (/root/reference/src/maxmind.rs:161-168).
 """
@@ -17,7 +19,6 @@ import os
 from pathlib import Path
 
 import numpy as np
-import pandas as pd
 
 from ..sources.mmdb import IntervalTable, load_interval_table
 from . import _ipparse
@@ -93,7 +94,7 @@ class FlatTable:
             np.putmask(hi4, hi[inter] > _V4_PFX_HI, np.uint32(0xFFFFFFFF))
             self.lo4, self.hi4 = lo4, hi4
             self.idx4 = rec_idx[inter].astype(np.int32)
-            inside = _is_v4_mapped(m_lo) & _is_v4_mapped(m_hi)
+            inside = _ipparse.is_v4_mapped(m_lo) & _ipparse.is_v4_mapped(m_hi)
             keep6 = ~inside
             self.lo6, self.hi6 = lo[keep6], hi[keep6]
             self.idx6 = rec_idx[keep6].astype(np.int32)
@@ -124,9 +125,11 @@ class FlatTable:
             col[n] = default
             self.columns[name] = col
 
-    def lookup_s16(self, kb: np.ndarray, valid: np.ndarray) -> np.ndarray:
-        """``|S16`` key array + valid mask (from pack_ip_series_s16) ->
-        record row indices; fully vectorized, no per-row objects.
+    def lookup_s16(self, keys: np.ndarray, valid: np.ndarray) -> np.ndarray:
+        """Key matrix + valid mask from :func:`._ipparse.ip_keys` ->
+        record row indices (the defaults row for misses and invalid
+        keys); fully vectorized, no per-row objects.  ``keys`` is the
+        (n, 16) uint8 matrix, or the same bytes as an ``|S16`` array.
 
         v4-mapped keys take the uint32 index; the rest take the |S16
         remainder.  numpy ``|S16`` strips trailing NUL bytes, so a key
@@ -138,57 +141,22 @@ class FlatTable:
         |S16 too, so both sides of every searchsorted comparison use
         the same convention.
         """
-        n = len(kb)
+        n = len(keys)
         rows = np.full(n, self.n_records, dtype=np.int64)
         if n == 0 or not valid.any():
             return rows
-        m = np.frombuffer(kb.tobytes(), dtype=np.uint8).reshape(n, 16)
-        is4 = _is_v4_mapped(m) & valid
-        if is4.any() and len(self.lo4):
-            k4 = (
-                np.ascontiguousarray(m[is4, 12:16])
-                .view(">u4")
-                .ravel()
-                .astype(np.uint32)
-            )
-            pos = np.searchsorted(self.lo4, k4, side="right") - 1
-            ok = pos >= 0
-            hit = np.zeros(len(k4), dtype=bool)
-            hit[ok] = k4[ok] <= self.hi4[pos[ok]]
-            found = np.full(len(k4), self.n_records, dtype=np.int64)
-            found[hit] = self.idx4[pos[hit]]
-            rows[is4] = found
+        m = np.ascontiguousarray(keys).view(np.uint8).reshape(n, 16)
+        is4 = _ipparse.is_v4_mapped(m) & valid
         rest = valid & ~is4
-        if rest.any() and len(self.lo6):
-            vk = kb[rest]
-            pos = np.searchsorted(self.lo6, vk, side="right") - 1
-            ok = pos >= 0
-            hit = np.zeros(len(vk), dtype=bool)
-            hit[ok] = vk[ok] <= self.hi6[pos[ok]]
-            found = np.full(len(vk), self.n_records, dtype=np.int64)
-            found[hit] = self.idx6[pos[hit]]
-            rows[rest] = found
+        for mask, k, lo, hi, idx in (
+            (is4, np.ascontiguousarray(m[is4, 12:16]).view(">u4").ravel(),
+             self.lo4, self.hi4, self.idx4),
+            (rest, m[rest].view("|S16").ravel(), self.lo6, self.hi6, self.idx6),
+        ):
+            if len(k) and len(lo):
+                pos = _ipparse.interval_pos(lo, hi, k.astype(lo.dtype, copy=False))
+                rows[mask] = np.where(pos >= 0, idx[pos], self.n_records)
         return rows
-
-    def lookup(self, keys_obj: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Object array of 16-byte keys (None = invalid/null input) ->
-        (record_row_index array with defaults row for misses, valid mask)."""
-        n = len(keys_obj)
-        mask = np.array([k is not None for k in keys_obj], dtype=bool)
-        kb = np.zeros((n, 16), dtype=np.uint8)
-        vidx = np.flatnonzero(mask)
-        for i in vidx:
-            kb[i] = np.frombuffer(keys_obj[i], dtype=np.uint8)
-        return self.lookup_s16(kb.view("|S16").reshape(n), mask), mask
-
-
-def _is_v4_mapped(m: np.ndarray) -> np.ndarray:
-    """(n, 16) uint8 key matrix -> mask of keys inside ::ffff:0:0/96."""
-    return (
-        (m[:, 10] == 0xFF)
-        & (m[:, 11] == 0xFF)
-        & ~m[:, :10].any(axis=1)
-    )
 
 
 class BroadcastedDB:
@@ -240,49 +208,6 @@ def shipped(bc, value):
     if bc is not None:
         return lambda: bc.value
     return lambda: value
-
-
-def series_to_keys_s16(s: pd.Series) -> tuple[np.ndarray, np.ndarray] | None:
-    """``|S16`` fast path for STRING (or all-null) batches: returns
-    (key array, valid mask) with zero per-row Python on the IPv4 hot
-    path.  Returns None for binary / numeric typed-column inputs —
-    those take the object-key path in :func:`series_to_keys`."""
-    vals = s.to_numpy()
-    first = next((v for v in vals if v is not None), None)
-    if first is None or isinstance(first, str):
-        return _ipparse.pack_ip_series_s16(s)
-    return None
-
-
-def series_to_keys(s: pd.Series) -> np.ndarray:
-    """Normalize a UDF input batch (str / int u32 / 16-byte binary) into
-    16-byte key objects, mirroring series_to_ipaddrs
-    (/root/reference/src/iptools.rs:444-502)."""
-    vals = s.to_numpy()
-    first = next((v for v in vals if v is not None), None)
-    if isinstance(first, (bytes, bytearray)):
-        out = np.full(len(vals), None, dtype=object)
-        for i, v in enumerate(vals):
-            if v is None:
-                continue
-            b = bytes(v)
-            if len(b) == 16:
-                out[i] = b
-            elif len(b) == 4:
-                out[i] = _ipparse.V4_MAPPED_PREFIX + b
-        return out
-    if first is not None and not isinstance(first, str):
-        nums = pd.to_numeric(s, errors="coerce")
-        out = np.full(len(vals), None, dtype=object)
-        ok = nums.notna().to_numpy() & (nums >= 0).to_numpy() & (
-            nums <= 0xFFFFFFFF
-        ).to_numpy()
-        idx = np.flatnonzero(ok)
-        if len(idx):
-            packed = _ipparse.v4_num_to_packed16(nums.to_numpy()[idx].astype(np.uint32))
-            out[idx] = [p.tobytes() for p in packed]
-        return out
-    return _ipparse.pack_ip_series(s)
 
 
 # -- field extractors --------------------------------------------------------

@@ -2,18 +2,21 @@
 
 Everything here operates on whole pandas Series / numpy arrays — one
 call per Arrow batch, no per-row Python UDFs (BASELINE.json
-input_hint).  IPv4 is the hot path: C-level ``inet_aton`` per row with
-a vectorized canonical-roundtrip strictness gate (see
-:func:`parse_v4_strict`); IPv6 falls back to stdlib ``ipaddress`` only
-for the (rare) rows the fast path rejected.
+input_hint).  :func:`ip_keys` is the one place a UDF input batch
+(string, u32 integer or 4/16-byte binary) becomes IP keys, the analog
+of the reference's ``series_to_ipaddrs`` (reference
+``src/iptools.rs:444-502``).  IPv4 text is the hot path:
+a vectorized strict dotted-quad parse (:func:`parse_v4_strict`); IPv6
+falls back to stdlib ``ipaddress`` only for the (rare) rows the fast
+path rejected.
 
 Canonical 16-byte form: IPv4 is stored v4-mapped (``::ffff:a.b.c.d``),
 matching the reference's IPAddress extension storage rule
 (/root/reference/src/iptools.rs:338,353,368).  Big-endian 16-byte keys
 compare bytewise exactly like the underlying unsigned 128-bit integers,
 so sorted ``|S16`` numpy arrays support ``np.searchsorted`` range
-lookups — the array-encoded equivalent of the reference's LC-trie
-(/root/reference/src/iptools.rs:130-151).
+lookups (:func:`interval_pos`) — the array-encoded equivalent of the
+reference's LC-trie (reference ``src/iptools.rs:130-151``).
 """
 
 from __future__ import annotations
@@ -74,7 +77,7 @@ _V4_RE2 = (
 
 
 def parse_v4_strict(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Object array of values -> (uint32 numbers, strict-valid mask).
+    """Object array of str/None -> (uint32 numbers, strict-valid mask).
 
     Vectorized Arrow-compute path (r07): ONE RE2 pass validates the
     strict grammar and a split + C-level int cast computes the numeric
@@ -83,7 +86,9 @@ def parse_v4_strict(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     batch; profiling showed this parse was >80% of the geoip / is_in /
     to_address batch kernels.  Batches Arrow cannot ingest as strings
     (mixed object types) fall back to the per-row parser, preserving
-    the non-str -> invalid contract.  Equivalence with V4_FULLMATCH
+    the non-str -> invalid contract.  Only string batches reach this
+    parser: :func:`ip_keys` sends binary batches down its own path, so
+    Arrow never utf8-decodes bytes as text.  Equivalence with V4_FULLMATCH
     (and with the fallback) is property-tested in
     tests/test_kernels_hypothesis.py.
     """
@@ -95,15 +100,6 @@ def parse_v4_strict(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        # Arrow would silently utf8-DECODE bytes rows into strings,
-        # but the kernel contract is non-str -> invalid (a Spark column
-        # is never mixed str/bytes, so this scan is pure defense)
-        if np.fromiter(
-            (isinstance(v, (bytes, bytearray, memoryview)) for v in arr),
-            dtype=bool,
-            count=n,
-        ).any():
-            return _parse_v4_strict_obj(arr)
         a = pa.array(arr, type=pa.string(), from_pandas=True)
         ok = pc.fill_null(pc.match_substring_regex(a, _V4_RE2), False)
         okn = ok.to_numpy(zero_copy_only=False)
@@ -122,131 +118,92 @@ def parse_v4_strict(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         return _parse_v4_strict_obj(arr)
 
 
-def v4_num_to_packed16(nums: np.ndarray) -> np.ndarray:
-    """uint32 array -> (n,16) uint8 array of v4-mapped addresses."""
-    out = np.zeros((len(nums), 16), dtype=np.uint8)
-    out[:, 10] = 0xFF
-    out[:, 11] = 0xFF
-    out[:, 12:16] = nums.astype(">u4").view(np.uint8).reshape(-1, 4)
-    return out
+def is_v4_mapped(m: np.ndarray) -> np.ndarray:
+    """(n, 16) uint8 key matrix -> mask of keys inside ::ffff:0:0/96."""
+    return (m[:, 10] == 0xFF) & (m[:, 11] == 0xFF) & ~m[:, :10].any(axis=1)
 
 
-def ip_to_int128(ip: str) -> int:
-    """Single IP string -> v4-mapped 128-bit int (raises on invalid)."""
-    addr = ipaddress.ip_address(ip)
-    if addr.version == 4:
-        return 0xFFFF00000000 | int(addr)
-    return int(addr)
+def _map_v4(keys: np.ndarray, idx: np.ndarray, octets: np.ndarray) -> None:
+    """Write (k, 4) big-endian IPv4 octets into rows ``idx`` of the key
+    matrix as v4-mapped ``::ffff:a.b.c.d``."""
+    keys[idx, 10:12] = 0xFF
+    keys[idx, 12:16] = octets
 
 
-def int128_to_bytes(v: int) -> bytes:
-    return v.to_bytes(16, "big")
+def _u32_octets(nums: np.ndarray) -> np.ndarray:
+    return nums.astype(">u4").view(np.uint8).reshape(-1, 4)
 
 
-def pack_ip_series(s: pd.Series) -> np.ndarray:
-    """Series of IP strings -> object array of 16-byte keys.
+def ip_keys(s: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """A UDF input batch -> ``(keys, valid, family)``: the one place a
+    batch becomes IP keys, after the reference's ``series_to_ipaddrs``
+    (reference ``src/iptools.rs:444-502``).
 
-    null -> None; unparseable -> None.  IPv4 rows take the vectorized
-    path; only non-IPv4 non-null rows hit the per-element fallback.
+    ``keys`` is an (n, 16) uint8 matrix of v4-mapped 16-byte keys (zero
+    where invalid), ``valid`` a bool mask, ``family`` int8: 0 for null
+    or invalid, 4 for IPv4, 6 for IPv6.  The batch's kind is decided
+    once, from its first non-null value (a Spark column has one type):
+
+    - binary: 16-byte values pass through, 4-byte values are v4-mapped,
+      other lengths are invalid.  Family 4 for 4-byte and v4-mapped
+      16-byte values (the storage rule ``to_string`` renders as a dotted
+      quad), else 6.
+    - integer: values in the u32 range are v4-mapped (family 4); others
+      are invalid.
+    - str: strict dotted quads are family 4; anything with a ``:`` that
+      stdlib parses as IPv6 is family 6, including ``::ffff:a.b.c.d``
+      text — the reference routes by the parsed family
+      (reference ``src/iptools.rs:160-166``), so a v4-mapped IPv6
+      string never matches a v4 CIDR although its key equals the IPv4's.
+
+    Use ``keys[i].tobytes()`` for a row's bytes: an element of the
+    ``|S16`` view drops trailing NULs (``::`` would come back empty).
     """
-    s = s.astype(object)
     n = len(s)
-    out = np.full(n, None, dtype=object)
-    if n == 0:
-        return out
-    notnull = s.notna().to_numpy()
-    arr = s.to_numpy()
-    allnums, v4mask = parse_v4_strict(arr)
-    if v4mask.any():
-        packed = v4_num_to_packed16(allnums[v4mask])
-        vals = [p.tobytes() for p in packed]
-        out[np.flatnonzero(v4mask)] = vals
-    # slow path: candidate v6 / weird strings
-    rest = np.flatnonzero(notnull & ~v4mask)
-    for i in rest:
-        v = arr[i]
-        if not isinstance(v, str) or ":" not in v:
-            continue
-        try:
-            out[i] = int128_to_bytes(ip_to_int128(v))
-        except ValueError:
-            pass
-    return out
+    keys = np.zeros((n, 16), dtype=np.uint8)
+    family = np.zeros(n, dtype=np.int8)
+    vals = s.to_numpy()
+    first = next((v for v in vals if v is not None), None)
+    if isinstance(first, (bytes, bytearray, memoryview)):
+        import pyarrow as pa
 
-
-def pack_ip_series_s16(s: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """Series of IP strings -> (``|S16`` key array, valid mask) with NO
-    per-row Python objects on the IPv4 fast path — the bytes land
-    directly in the (n, 16) matrix the searchsorted kernel consumes.
-    Only non-IPv4 non-null rows (rare in enrichment feeds) fall back to
-    per-element stdlib parsing.  Invalid/null rows: valid=False, key
-    bytes zero."""
-    s = s.astype(object)
-    n = len(s)
-    kb = np.zeros((n, 16), dtype=np.uint8)
-    valid = np.zeros(n, dtype=bool)
-    if n == 0:
-        return kb.view("|S16").reshape(n), valid
-    notnull = s.notna().to_numpy()
-    arr = s.to_numpy()
-    allnums, v4mask = parse_v4_strict(arr)
-    if v4mask.any():
+        # the values' offsets and bytes as numpy views of one Arrow
+        # binary array: every row is a slice of ``buf``
+        _, offsets, data = pa.array(vals, type=pa.binary(), from_pandas=True).buffers()
+        off = np.frombuffer(offsets, dtype=np.int32, count=n + 1)
+        buf = np.frombuffer(data or b"", dtype=np.uint8)
+        length = np.diff(off)  # null rows have length 0
+        i16 = np.flatnonzero(length == 16)
+        keys[i16] = buf[off[i16, None] + np.arange(16)]
+        family[i16] = np.where(is_v4_mapped(keys[i16]), 4, 6)
+        i4 = np.flatnonzero(length == 4)
+        _map_v4(keys, i4, buf[off[i4, None] + np.arange(4)])
+        family[i4] = 4
+    elif first is not None and not isinstance(first, str):
+        nums = pd.to_numeric(s, errors="coerce")
+        ok = (nums.notna() & (nums >= 0) & (nums <= 0xFFFFFFFF)).to_numpy()
+        idx = np.flatnonzero(ok)
+        _map_v4(keys, idx, _u32_octets(nums.to_numpy()[idx].astype(np.uint32)))
+        family[idx] = 4
+    elif n:
+        arr = vals.astype(object, copy=False)
+        nums, v4mask = parse_v4_strict(arr)
         idx = np.flatnonzero(v4mask)
-        kb[idx, 10] = 0xFF
-        kb[idx, 11] = 0xFF
-        kb[idx, 12:16] = (
-            allnums[idx].astype(">u4").view(np.uint8).reshape(-1, 4)
-        )
-        valid[idx] = True
-    rest = np.flatnonzero(notnull & ~v4mask)
-    for i in rest:
-        v = arr[i]
-        if not isinstance(v, str) or ":" not in v:
-            continue
-        try:
-            kb[i] = np.frombuffer(
-                int128_to_bytes(ip_to_int128(v)), dtype=np.uint8
-            )
-            valid[i] = True
-        except ValueError:
-            pass
-    return kb.view("|S16").reshape(n), valid
-
-
-def pack_ip_series_with_family(s: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """Like :func:`pack_ip_series` but also reports the TEXTUAL address
-    family per row (0 = null/invalid, 4 = dotted-quad literal, 6 =
-    parsed as IPv6 — including v4-mapped text like ``::ffff:1.2.3.4``).
-
-    The reference keeps two tries and routes by the parsed family
-    (/root/reference/src/iptools.rs:160-166): a v4-mapped IPv6 *string*
-    is a V6 address and must never match v4-only CIDR sets, even though
-    its 16-byte key equals the mapped IPv4's.
-    """
-    s = s.astype(object)
-    n = len(s)
-    out = np.full(n, None, dtype=object)
-    fam = np.zeros(n, dtype=np.int8)
-    if n == 0:
-        return out, fam
-    notnull = s.notna().to_numpy()
-    arr = s.to_numpy()
-    allnums, v4mask = parse_v4_strict(arr)
-    if v4mask.any():
-        packed = v4_num_to_packed16(allnums[v4mask])
-        out[np.flatnonzero(v4mask)] = [p.tobytes() for p in packed]
-        fam[v4mask] = 4
-    rest = np.flatnonzero(notnull & ~v4mask)
-    for i in rest:
-        v = arr[i]
-        if not isinstance(v, str) or ":" not in v:
-            continue
-        try:
-            out[i] = int128_to_bytes(int(ipaddress.IPv6Address(v)))
-            fam[i] = 6
-        except ValueError:
-            pass
-    return out, fam
+        _map_v4(keys, idx, _u32_octets(nums[idx]))
+        family[idx] = 4
+        # per-row stdlib fallback only for non-IPv4 rows that could be v6
+        for i in np.flatnonzero(s.notna().to_numpy() & ~v4mask):
+            v = arr[i]
+            if not isinstance(v, str) or ":" not in v:
+                continue
+            try:
+                keys[i] = np.frombuffer(
+                    int(ipaddress.IPv6Address(v)).to_bytes(16, "big"), dtype=np.uint8
+                )
+                family[i] = 6
+            except ValueError:
+                pass
+    return keys, family != 0, family
 
 
 # precomputed octet strings: dotted-quad rendering becomes four C-level
@@ -299,26 +256,17 @@ def sort_intervals(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Merge + sort [lo,hi] 128-bit int intervals into |S16 key arrays."""
     merged = merge_intervals(intervals)
-    lo_arr = np.array([int128_to_bytes(lo) for lo, _ in merged], dtype="|S16")
-    hi_arr = np.array([int128_to_bytes(hi) for _, hi in merged], dtype="|S16")
+    lo_arr = np.array([lo.to_bytes(16, "big") for lo, _ in merged], dtype="|S16")
+    hi_arr = np.array([hi.to_bytes(16, "big") for _, hi in merged], dtype="|S16")
     return lo_arr, hi_arr
 
 
-def membership(
-    keys: np.ndarray, mask: np.ndarray, lo_arr: np.ndarray, hi_arr: np.ndarray
-) -> np.ndarray:
-    """For object array of 16-byte keys (None where invalid) return an
-    object array of True/False/None membership flags."""
-    out = np.full(len(keys), None, dtype=object)
-    valid_idx = np.flatnonzero(mask)
-    if len(valid_idx) == 0 or len(lo_arr) == 0:
-        if len(lo_arr) == 0:
-            out[valid_idx] = False
-        return out
-    kb = np.array([keys[i] for i in valid_idx], dtype="|S16")
-    pos = np.searchsorted(lo_arr, kb, side="right") - 1
-    ok = pos >= 0
-    hit = np.zeros(len(kb), dtype=bool)
-    hit[ok] = kb[ok] <= hi_arr[pos[ok]]
-    out[valid_idx] = hit.astype(object)
-    return out
+def interval_pos(lo: np.ndarray, hi: np.ndarray, keys: np.ndarray) -> np.ndarray:
+    """Index of the sorted, disjoint ``[lo, hi]`` interval holding each
+    key, -1 where none does.  ``lo``/``hi``/``keys`` share one dtype:
+    ``uint32`` or ``|S16`` arrays (array-vs-array, so ``|S16`` compares
+    full fixed-width bytes)."""
+    pos = np.searchsorted(lo, keys, side="right") - 1
+    hit = pos >= 0
+    hit[hit] = keys[hit] <= hi[pos[hit]]
+    return np.where(hit, pos, -1)

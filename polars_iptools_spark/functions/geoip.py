@@ -11,7 +11,6 @@ Semantics pinned to /root/reference/src/geoip.rs:
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
@@ -19,6 +18,7 @@ from pyspark.sql.types import StringType
 
 from ..schemas import GEOIP_SCHEMA
 from . import _enrich
+from ._ipparse import ip_keys
 
 __all__ = ["asn", "full"]
 
@@ -45,13 +45,8 @@ def asn_udf(reload_mmdb: bool = False, db_dir: str | None = None):
     @F.pandas_udf(StringType())
     def _asn_udf(s: pd.Series) -> pd.Series:
         t = load()["asn"]
-        fast = _enrich.series_to_keys_s16(s)
-        if fast is not None:  # string batches: zero per-row Python
-            kb, mask = fast
-            rows = t.lookup_s16(kb, mask)
-        else:
-            keys = _enrich.series_to_keys(s)
-            rows, mask = t.lookup(keys)
+        keys, mask, _ = ip_keys(s)
+        rows = t.lookup_s16(keys, mask)
         # strings pre-formatted once per record at table build; the
         # batch path is a single vectorized gather
         out = t.columns["asn_str"][rows].copy()
@@ -82,15 +77,9 @@ def full_udf(reload_mmdb: bool = False, db_dir: str | None = None):
     def _full_udf(s: pd.Series) -> pd.DataFrame:
         tabs = load()
         ta, tc = tabs["asn"], tabs["city"]
-        fast = _enrich.series_to_keys_s16(s)
-        if fast is not None:  # string batches: zero per-row Python
-            kb, mask = fast
-            rows_a = ta.lookup_s16(kb, mask)
-            rows_c = tc.lookup_s16(kb, mask)
-        else:
-            keys = _enrich.series_to_keys(s)
-            rows_a, mask = ta.lookup(keys)
-            rows_c, _ = tc.lookup(keys)
+        keys, mask, _ = ip_keys(s)
+        rows_a = ta.lookup_s16(keys, mask)
+        rows_c = tc.lookup_s16(keys, mask)
         data = {}
         # asnnum is stored int64 in the flat table — typed gather, no
         # per-row unboxing

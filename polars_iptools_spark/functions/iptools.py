@@ -360,38 +360,11 @@ def to_string(expr: Column | str) -> Column:
 
 @F.pandas_udf(BinaryType())
 def _to_address_udf(s: pd.Series) -> pd.Series:
-    vals = s.to_numpy()
-    n = len(vals)
-    out = np.full(n, None, dtype=object)
-    if n == 0:
-        return pd.Series(out)
-    first = next((v for v in vals if v is not None), None)
-    if isinstance(first, (bytes, bytearray)):
-        # binary passthrough (/root/reference/src/iptools.rs:380);
-        # 4-byte v4 binary promoted to v4-mapped 16 bytes
-        for i, v in enumerate(vals):
-            if v is None:
-                continue
-            b = bytes(v)
-            if len(b) == 16:
-                out[i] = b
-            elif len(b) == 4:
-                out[i] = _ipparse.V4_MAPPED_PREFIX + b
-        return pd.Series(out)
-    if first is not None and not isinstance(first, str):
-        # integer u32 storage -> v4-mapped binary
-        nums = pd.to_numeric(s, errors="coerce")
-        ok = nums.notna().to_numpy() & (nums >= 0).to_numpy() & (
-            nums <= _MAX_U32
-        ).to_numpy()
-        idx = np.flatnonzero(ok)
-        if len(idx):
-            packed = _ipparse.v4_num_to_packed16(
-                nums.to_numpy()[idx].astype(np.uint32)
-            )
-            out[idx] = [p.tobytes() for p in packed]
-        return pd.Series(out)
-    return pd.Series(_ipparse.pack_ip_series(s))
+    keys, valid, _ = _ipparse.ip_keys(s)
+    out = np.full(len(s), None, dtype=object)
+    # row bytes from the uint8 matrix: an |S16 element drops trailing NULs
+    out[valid] = [k.tobytes() for k in keys[valid]]
+    return pd.Series(out)
 
 
 @F.pandas_udf(StringType())
@@ -524,17 +497,17 @@ def _is_in_kernel(
     l6: np.ndarray,
     h6: np.ndarray,
 ) -> pd.Series:
-    """The batch membership kernel behind the is_in UDF — module-level
-    so the hypothesis property suite can pin it against stdlib
-    ``ipaddress`` without a SparkSession."""
-    keys, fam = _ipparse.pack_ip_series_with_family(s)
-    out = np.full(len(keys), None, dtype=object)
-    m4 = fam == 4
-    m6 = fam == 6
-    if m4.any():
-        out[m4] = _ipparse.membership(keys, m4, l4, h4)[m4]
-    if m6.any():
-        out[m6] = _ipparse.membership(keys, m6, l6, h6)[m6]
+    """The batch membership kernel behind the is_in UDF: the batch's
+    keys from :func:`._ipparse.ip_keys`, each family searched in its
+    own sorted ``|S16`` interval list.  Module-level so the hypothesis
+    property suite can pin it against stdlib ``ipaddress`` without a
+    SparkSession."""
+    keys, _, family = _ipparse.ip_keys(s)
+    k = keys.view("|S16").ravel()
+    out = np.full(len(s), None, dtype=object)
+    for fam, lo, hi in ((4, l4, h4), (6, l6, h6)):
+        m = family == fam
+        out[m] = (_ipparse.interval_pos(lo, hi, k[m]) >= 0).astype(object)
     return pd.Series(out)
 
 
@@ -569,7 +542,9 @@ def is_in(
     reference's two-trie split (src/iptools.rs:160-166): a dotted-quad
     string checks only v4 CIDRs; anything parsed as IPv6 — including
     v4-mapped text like ``::ffff:1.2.3.4`` — checks only v6 CIDRs.
-    The network set is compiled once, when the Column is built, into merged
+    Typed columns route like :func:`._ipparse.ip_keys`: u32 integers,
+    4-byte and v4-mapped 16-byte binaries check the v4 CIDRs, other
+    16-byte binaries the v6 ones.  The network set is compiled once, when the Column is built, into merged
     intervals.  Up to 64 intervals become pure-Catalyst range tests (v6
     bounds compare as fixed-width hex strings); larger sets run a
     searchsorted pandas UDF over sorted interval arrays, shipped as a
@@ -588,16 +563,29 @@ def is_in(
         b6 = [(format(lo, "032x"), format(hi, "032x")) for lo, hi in v6_iv]
 
         def member(c: Column) -> Column:
-            in4 = _let(
-                ipv4_to_numeric(c), lambda n: F.when(n.isNotNull(), _in_sorted(n, b4))
+            # each input type reduces to a u32 (IPv4) or 32-hex-digit
+            # (IPv6) value, routed like ip_keys: u32 integers, 4-byte
+            # and v4-mapped 16-byte binaries are IPv4, other 16-byte
+            # binaries IPv6, other lengths invalid
+            h = F.lower(F.hex(c))
+            n = c.cast("string").try_cast("long")
+            mapped = (F.length(h) == 32) & h.startswith(_V4_MAPPED_HEX)
+            quad = F.when(F.length(h) == 8, h).when(mapped, F.substring(h, 25, 8))
+            v4 = _by_input_type(
+                c,
+                ipv4_to_numeric(c),
+                F.conv(quad, 16, 10).cast("long"),
+                F.when((n >= 0) & (n <= _MAX_U32), n),
             )
+            in4 = _let(v4, lambda v: F.when(v.isNotNull(), _in_sorted(v, b4)))
+            binary6 = (F.length(h) == 32) & ~mapped
             if b6:
-                in6 = _let(
-                    _v6_hex(c), lambda h: F.when(h.isNotNull(), _in_sorted(h, b6))
-                )
+                v6 = _by_input_type(c, _v6_hex(c), F.when(binary6, h), F.lit(None))
+                in6 = _let(v6, lambda v: F.when(v.isNotNull(), _in_sorted(v, b6)))
             else:
-                # valid IPv6 string but v4-only set -> false; invalid -> null
-                in6 = F.when(c.rlike(V6_ANCHORED), F.lit(False))
+                # valid IPv6 but v4-only set -> false; invalid -> null
+                is6 = _by_input_type(c, c.rlike(V6_ANCHORED), binary6, F.lit(None))
+                in6 = F.when(is6, F.lit(False))
             return F.coalesce(in4, in6)
 
         return _let(_col(expr), member)

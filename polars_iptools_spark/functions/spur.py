@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..schemas import SPUR_SCHEMA
 from . import _enrich
+from ._ipparse import ip_keys
 
 __all__ = ["full"]
 
@@ -30,13 +31,8 @@ def full_udf(reload_mmdb: bool = False, db_dir: str | None = None):
     @F.pandas_udf(SPUR_SCHEMA)
     def _spur_udf(s: pd.Series) -> pd.DataFrame:
         t = load()["spur"]
-        fast = _enrich.series_to_keys_s16(s)
-        if fast is not None:  # string batches: zero per-row Python
-            kb, mask = fast
-            rows = t.lookup_s16(kb, mask)
-        else:
-            keys = _enrich.series_to_keys(s)
-            rows, mask = t.lookup(keys)
+        keys, mask, _ = ip_keys(s)
+        rows = t.lookup_s16(keys, mask)
         data = {name: col[rows] for name, col in t.columns.items()}
         data["client_count"] = pd.array(
             [float(v) for v in data["client_count"]], dtype="Float32"

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions._par import ensure_parallelism
+from ..functions._par import ensure_parallelism, pair_fanout
 
 
 class CacheScope:
@@ -138,12 +138,7 @@ def ngram_jaccard_pairs(
     # bytes — without this the pair blow-up serializes onto a handful
     # of tasks (same reason as blocking.candidate_pairs; user
     # repartitions are exempt from AQE coalescing)
-    try:
-        parts = max(df.sparkSession.sparkContext.defaultParallelism * 2, 8)
-    except Exception:
-        # Spark Connect has no sparkContext — fall back to a fixed
-        # fan-out (same contract as functions/_par.ensure_parallelism)
-        parts = 16
+    parts = pair_fanout(df)
     idx = idx.repartition(parts, "sh")
     a = idx.select(F.col("doc").alias("doc_a"), "sh")
     b = idx.select(F.col("doc").alias("doc_b"), "sh")
@@ -287,8 +282,9 @@ def minhash_lsh_pairs(
     verification of candidates only (shingle→minhash→band→bucket-join).
 
     ``caches``: optional :class:`CacheScope` that takes ownership of the
-    persisted shingle-set frame so the caller can free storage after
-    materialization (see the class docstring).
+    persisted shingle-set and bucket frames so the caller can free
+    storage after materialization (see the class docstring).
+    ``persist_sets=False`` persists neither.
     """
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
@@ -337,7 +333,9 @@ def minhash_lsh_pairs(
     buckets = sigs.select(
         "doc", F.posexplode(band_hashes).alias("band", "bucket")
     )
-    cand = _bucket_pairs(buckets, max_bucket_size, caches=caches)
+    cand = _bucket_pairs(
+        buckets, max_bucket_size, caches=caches, persist_buckets=persist_sets
+    )
     # verify candidates with exact shingle Jaccard — join the per-doc
     # shingle *sets* onto the (small) candidate list and intersect
     # per-pair, instead of re-joining the full inverted index (which

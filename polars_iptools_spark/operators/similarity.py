@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions._par import pair_fanout
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -296,13 +298,7 @@ def lsh_near_duplicates(
     # dot below runs at full cluster parallelism instead of on the ~1
     # task AQE's byte-based coalescing would leave for this byte-small,
     # compute-heavy stream (guide §2.5).
-    try:
-        parts = max(
-            embeddings.sparkSession.sparkContext.defaultParallelism * 2, 8
-        )
-    except Exception:
-        # Spark Connect has no sparkContext — fixed fan-out fallback
-        parts = 16
+    parts = pair_fanout(embeddings)
     cand = _bucket_pairs(b, max_bucket_size, shuffle_pairs=parts).withColumnsRenamed(
         {"doc_a": "id_a", "doc_b": "id_b"}
     )

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import iptools
+from ..functions._par import pair_fanout
 
 
 def record_id(*cols: str) -> Column:
@@ -195,11 +196,7 @@ def candidate_pairs(
     handful of tasks.  An explicit user repartition is exempt from AQE
     coalescing, so the pair generation keeps full-cluster parallelism.
     """
-    try:
-        parts = max(blocked.sparkSession.sparkContext.defaultParallelism * 2, 8)
-    except Exception:
-        # Spark Connect has no sparkContext — fixed fan-out fallback
-        parts = 16
+    parts = pair_fanout(blocked)
     cols = ["rid", "ip", "path", "repo", "block_key"]
     narrowed = blocked.select(cols).repartition(parts, "block_key")
     a = narrowed.select(

@@ -3,9 +3,10 @@ no SparkSession needed, so they pin the batch kernels' semantics
 independently of the JVM.
 
 Two equivalence contracts:
-1. ``pack_ip_series_s16`` (the zero-object |S16 enrichment key path
-   added for geoip/spur string batches) must agree byte-for-byte with
-   the older object-array ``pack_ip_series`` on every input.
+1. ``ip_keys`` (the one normalizer every IP kernel feeds its input
+   batch through) must agree with stdlib ``ipaddress`` on the 16-byte
+   key, the validity and the address family of every row — for string,
+   4/16/other-length binary and integer batches.
 2. ``jaro_winkler_batch`` (the vectorized (L, N) matrix kernel that
    scores candidate pairs) must agree with the scalar textbook
    ``jaro_winkler`` to float precision on every string pair.
@@ -30,23 +31,101 @@ _garbage = st.text("0123456789abcdefg.:% \n", max_size=20)
 _ip_like = st.one_of(_v4, _v6, _garbage, st.none())
 
 
-@settings(max_examples=200, deadline=None)
-@given(st.lists(_ip_like, max_size=40))
-def test_pack_s16_matches_object_path(vals):
-    s = pd.Series(vals, dtype=object)
-    kb, valid = _ipparse.pack_ip_series_s16(s)
-    legacy = _ipparse.pack_ip_series(s)
-    for i in range(len(s)):
-        if legacy[i] is None:
-            assert not valid[i], f"row {i}: s16 valid but legacy None ({vals[i]!r})"
+_MAPPED = 0xFFFF << 32
+
+
+def _stdlib_key(v):
+    """(16-byte key, family) of one batch value per stdlib ``ipaddress``,
+    or None when the row is null / invalid."""
+    if v is None:
+        return None
+    if isinstance(v, bytes):
+        if len(v) == 4:
+            return (_MAPPED | int(ipaddress.IPv4Address(v))).to_bytes(16, "big"), 4
+        if len(v) != 16:
+            return None
+        addr = ipaddress.IPv6Address(v)
+        return v, 4 if addr.ipv4_mapped is not None else 6
+    if isinstance(v, int):
+        if not 0 <= v <= 0xFFFFFFFF:
+            return None
+        return (_MAPPED | v).to_bytes(16, "big"), 4
+    try:
+        addr = ipaddress.ip_address(v)
+    except ValueError:
+        return None
+    if addr.version == 4:
+        # the strict grammar: stdlib also rejects leading zeros
+        return (_MAPPED | int(addr)).to_bytes(16, "big"), 4
+    return int(addr).to_bytes(16, "big"), 6
+
+
+def _check_ip_keys(vals, dtype=object):
+    keys, valid, family = _ipparse.ip_keys(pd.Series(vals, dtype=dtype))
+    assert keys.shape == (len(vals), 16) and keys.dtype == np.uint8
+    for i, v in enumerate(vals):
+        exp = _stdlib_key(v)
+        if exp is None:
+            assert not valid[i] and family[i] == 0, (v, valid[i], family[i])
         else:
-            assert valid[i], f"row {i}: legacy parsed but s16 invalid ({vals[i]!r})"
-            # numpy |S16 strips trailing NULs; zero-pad back to 16 for
-            # the byte-level comparison (ordering semantics unaffected —
-            # see FlatTable.lookup_s16)
-            assert bytes(kb[i]).ljust(16, b"\x00") == legacy[i], (
-                f"row {i}: key bytes differ ({vals[i]!r})"
-            )
+            assert valid[i], v
+            assert (keys[i].tobytes(), int(family[i])) == exp, (v, keys[i].tobytes())
+
+
+# all-zero tails: an |S16 element would drop these NULs
+_ZERO_TAILS = ["::", "0.0.0.0", "10.0.0.0", "::ffff:0.0.0.0", "1::"]
+_mapped_v6 = st.integers(0, 0xFFFFFFFF).map(lambda v: str(ipaddress.IPv6Address(_MAPPED | v)))
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.one_of(_ip_like, _mapped_v6, st.sampled_from(_ZERO_TAILS)), max_size=40))
+def test_ip_keys_str_matches_stdlib(vals):
+    _check_ip_keys(vals)
+
+
+_addr_bytes = st.one_of(
+    st.binary(min_size=4, max_size=4),
+    st.binary(min_size=16, max_size=16),
+    st.integers(0, 0xFFFFFFFF).map(lambda v: (_MAPPED | v).to_bytes(16, "big")),
+    st.sampled_from([bytes(16), bytes(4), bytes(12) + b"\n\0\0\0", b"\x01" + bytes(15)]),
+    st.binary(max_size=20),
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.one_of(_addr_bytes, st.none()), max_size=40))
+def test_ip_keys_binary_matches_stdlib(vals):
+    _check_ip_keys(vals)
+
+
+_u32ish = st.one_of(
+    st.integers(0, 0xFFFFFFFF),
+    st.sampled_from([0, 167772160, 0xFFFFFFFF, -1, 1 << 32]),
+    st.integers(-(1 << 63), (1 << 63) - 1),
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(_u32ish, max_size=40), st.booleans())
+def test_ip_keys_integer_matches_stdlib(vals, with_null):
+    # an int64 batch, or (with nulls) the float64/object form pandas
+    # gives a nullable integer column
+    if with_null:
+        _check_ip_keys([v if i % 3 else None for i, v in enumerate(vals)])
+    else:
+        _check_ip_keys(vals, dtype="int64")
+
+
+def test_ip_keys_bytes_batch_is_not_decoded_as_text():
+    """A binary batch takes the binary path even when its bytes spell
+    an address: b"1.2.3.4" is 7 bytes (invalid), not the text 1.2.3.4,
+    and 16 ASCII bytes are a key, not text."""
+    text16 = b"1234:5678::9abc0"
+    keys, valid, family = _ipparse.ip_keys(
+        pd.Series([b"1.2.3.4", text16, b"::1"], dtype=object)
+    )
+    assert valid.tolist() == [False, True, False]
+    assert keys[1].tobytes() == text16 and family.tolist() == [0, 6, 0]
 
 
 _v4ish = st.one_of(

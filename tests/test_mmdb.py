@@ -71,7 +71,7 @@ def test_flat_table_split_v4_index():
     import pandas as pd
 
     from polars_iptools_spark.functions._enrich import FlatTable
-    from polars_iptools_spark.functions._ipparse import pack_ip_series_s16
+    from polars_iptools_spark.functions._ipparse import ip_keys
     from polars_iptools_spark.sources.mmdb import IntervalTable
 
     def k(ip):
@@ -116,7 +116,7 @@ def test_flat_table_split_v4_index():
             "::1",               # below the /96, inside wide's raw range
         ]
     )
-    kb, valid = pack_ip_series_s16(ips)
+    kb, valid, _ = ip_keys(ips)
     rows = ft.lookup_s16(kb, valid)
     got = [ft.columns["v"][r] for r in rows]
     assert got == ["wide", "wide", "wide", "six", "miss", "high", "wide"]

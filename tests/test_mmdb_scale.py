@@ -12,6 +12,7 @@ import ipaddress
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from polars_iptools_spark.sources import mmdb_synth
 from polars_iptools_spark.sources.mmdb import MMDBFile
@@ -84,18 +85,33 @@ def test_driver_lookup_matches_oracle(synth_dir):
 def test_geoip_full_end_to_end_spark(spark, synth_dir):
     """geoip.full through the real broadcast + Arrow UDF path against a
     120k-network DB: every enriched field recomputed independently from
-    the record-index arithmetic."""
+    the record-index arithmetic.  The string, bigint, 16-byte and 4-byte
+    binary forms of each address enrich to identical ``full`` and
+    ``asn`` rows (typed-column input normalization)."""
+    import polars_iptools_spark as ip
     from polars_iptools_spark.functions import geoip
 
     addrs = _sample_addrs(N_CITY, step=1531 * 4096)
-    rows_in = [(a, str(ipaddress.ip_address(a))) for a in addrs]
-    df = spark.createDataFrame(rows_in, "addr long, ip string")
-    got = {
-        r.addr: r.g
-        for r in df.select(
-            "addr", geoip.full("ip", db_dir=str(synth_dir), reload_mmdb=True).alias("g")
-        ).collect()
-    }
+    rows_in = [(a, str(ipaddress.ip_address(a)), a.to_bytes(4, "big")) for a in addrs]
+    # plus a null row and an unparseable one, in every form
+    rows_in += [(None, None, None), (1 << 40, "not-an-ip", b"\x01\x02\x03")]
+    df = spark.createDataFrame(rows_in, "addr long, ip string, b4 binary")
+    forms = [F.col("ip"), F.col("addr"), ip.to_address("ip"), F.col("b4")]
+    db = str(synth_dir)
+    out = df.select(
+        "addr",
+        *[geoip.full(c, db_dir=db, reload_mmdb=i == 0).alias(f"g{i}") for i, c in enumerate(forms)],
+        *[geoip.asn(c, db_dir=db).alias(f"a{i}") for i, c in enumerate(forms)],
+    ).collect()
+    for r in out:
+        assert r.g0 == r.g1 == r.g3 and r.a0 == r.a1 == r.a3, r
+        # to_address turns the unparseable row into null, so asn differs
+        if r.addr != 1 << 40:
+            assert r.g2 == r.g0 and r.a2 == r.a0, r
+    bad = {r.addr: r for r in out if r.addr is None or r.addr == 1 << 40}
+    assert bad[None].g0.city is None and bad[None].a0 is None
+    assert bad[1 << 40].g0.city is None and bad[1 << 40].a0 == ""
+    got = {r.addr: r.g0 for r in out if r.addr in set(addrs)}
     assert len(got) == len(addrs)
     for a in addrs:
         j = mmdb_synth.expected_city_record_index(a, N_CITY, N_CITY_REC)
@@ -202,7 +218,7 @@ def test_v6_tiling_end_to_end(tmp_path):
     import pandas as pd
 
     from polars_iptools_spark.functions._enrich import build_geoip_tables
-    from polars_iptools_spark.functions._ipparse import pack_ip_series_s16
+    from polars_iptools_spark.functions._ipparse import ip_keys
 
     NV4, NV6, NREC = 10_000, 5_000, 800
     mmdb_synth.write_synthetic_geolite(
@@ -234,7 +250,7 @@ def test_v6_tiling_end_to_end(tmp_path):
     tests.append(("2800::1", None))       # past the v6 tiling
     assert any(e is not None for _, e in tests[-20:-2])  # v6 hits sampled
 
-    kb, valid = pack_ip_series_s16(pd.Series([t[0] for t in tests]))
+    kb, valid, _ = ip_keys(pd.Series([t[0] for t in tests]))
     rows = city.lookup_s16(kb, valid)
     for (ip_s, exp), r in zip(tests, rows):
         want = f"City {exp}" if exp is not None else ""

@@ -170,6 +170,22 @@ def test_typed_roundtrip_on_u32_matches_kernels(spark, vals):
         assert (r.a, r.t) == (r.a_ref, r.t_ref), (v, r)
 
 
+def test_to_address_udf_keeps_trailing_nul_bytes(spark):
+    """The pandas kernel returns all 16 bytes of keys that end in NULs
+    (an ``|S16`` element of the key matrix would drop them)."""
+    mapped = bytes(10) + b"\xff\xff"
+    df = spark.createDataFrame(
+        [("::", bytes(16)), ("0.0.0.0", bytes(4)), ("10.0.0.0", b"\n" + bytes(3))],
+        "s string, b binary",
+    )
+    got = df.select(
+        iptools._to_address_udf("s").alias("a"), iptools._to_address_udf("b").alias("ab")
+    ).collect()
+    want = [bytes(16), mapped + bytes(4), mapped + b"\n" + bytes(3)]
+    assert [bytes(r.a) for r in got] == want
+    assert [bytes(r.ab) for r in got] == want
+
+
 # -- is_in over mixed-family sets ----------------------------------------
 
 _v4_cidr = st.builds(
@@ -195,6 +211,24 @@ def test_mixed_is_in_matches_kernel(spark, cidrs, vals):
     ).collect()
     for v, r in zip(vals, out):
         assert r.native == r.udf, (v, cidrs, r)
+
+
+@SETTINGS
+@given(
+    st.lists(st.one_of(_v4_cidr, _v6_cidr), min_size=1, max_size=20),
+    st.lists(st.tuples(_binary, _u32), max_size=60),
+)
+def test_typed_is_in_matches_kernel(spark, cidrs, vals):
+    """Binary and bigint columns: 4-byte and v4-mapped 16-byte values
+    and u32 integers check the v4 CIDRs, other 16-byte values the v6
+    ones, on both paths."""
+    df = spark.createDataFrame(vals, "b binary, n long")
+    out = df.select(
+        *[ip.is_in(c, cidrs).alias(f"{c}_native") for c in "bn"],
+        *[ip.is_in(c, cidrs, _force_udf=True).alias(f"{c}_udf") for c in "bn"],
+    ).collect()
+    for v, r in zip(vals, out):
+        assert (r.b_native, r.n_native) == (r.b_udf, r.n_udf), (v, cidrs, r)
 
 
 # -- IPv6-capable extraction ---------------------------------------------

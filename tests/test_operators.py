@@ -113,6 +113,18 @@ def test_cache_scope_releases_dedup_storage(spark, docs):
     assert (0, 2) in {(r.doc_a, r.doc_b) for r in pairs.collect()}
 
 
+def test_minhash_persist_sets_false_caches_nothing(spark):
+    """persist_sets=False persists nothing: neither the shingle sets
+    nor the LSH bucket frame enter Spark's cache manager."""
+    spark.catalog.clearCache()
+    df = spark.createDataFrame(DOCS, "doc_id long, text string")
+    pairs = dedup.minhash_lsh_pairs(
+        df, "doc_id", "text", num_hashes=32, bands=16, persist_sets=False
+    )
+    assert (0, 2) in {(r.doc_a, r.doc_b) for r in pairs.collect()}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_brute_force_topk_matches_numpy(spark):
     rng = np.random.default_rng(11)
     vecs = rng.standard_normal((40, 8)).astype(np.float32)

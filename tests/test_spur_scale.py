@@ -127,3 +127,31 @@ def test_spur_scale_distinct_hit_rate(spark, spur_scale_dir):
     tags = res.select("s.tag").distinct().count()
     res.unpersist()
     assert n == 10_000 and hits > 9_500 and tags >= 30, (n, hits, tags)
+
+
+def test_spur_full_typed_inputs_match_string(spark, spur_scale_dir):
+    """The string, bigint, 16-byte (``to_address``) and 4-byte binary
+    forms of each address give identical ``spur.full`` rows, and those
+    rows are the tiling oracle's (typed-column input normalization)."""
+    import polars_iptools_spark as ip
+
+    addrs = list(range(4096, N_NETS * 8192 // 4, 1_999 * 4096))
+    rows = [(a, str(ipaddress.IPv4Address(a)), a.to_bytes(4, "big")) for a in addrs]
+    rows.append((None, None, None))
+    df = spark.createDataFrame(rows, "addr long, ip string, b4 binary")
+    forms = [F.col("ip"), F.col("addr"), ip.to_address("ip"), F.col("b4")]
+    out = df.select(
+        "addr",
+        *[spur.full(c, db_dir=spur_scale_dir).alias(f"s{i}") for i, c in enumerate(forms)],
+    ).collect()
+    assert len(out) == len(addrs) + 1 and len(addrs) >= 20
+    for r in out:
+        assert r.s0 == r.s1 == r.s2 == r.s3, r
+        s = r.s0
+        if r.addr is None:
+            assert s.tag is None and s.client_count is None
+            continue
+        exp = mmdb_synth.expected_city_record_index(r.addr, N_NETS, N_REC)
+        assert (s.client_count, s.location_city, s.tag) == tuple(
+            _expected_struct(exp)[i] for i in (0, 2, 6)
+        ), (r.addr, exp)
